@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -52,6 +53,13 @@ object TranscriptPipeline {
       // aggregate per-batch notifications
       perRecordLevel: Option[String] = None)
 
+  /** The job's stop-guarded validation chain, shared by both flavors. */
+  def validate(src: DataFrame): DataFrame = Pipeline(src, Seq(
+    Required(Seq("conv_id", "turn_idx")),
+    DefaultValue(Map("tool" -> "none")),
+    Required(Seq("text")),
+    Truncate(Map("text" -> 4096))))
+
   /** Build and start the streaming query. Returns the query + sink (the
     * caller owns lifecycle — tests use processAllAvailable, production
     * awaitTermination).
@@ -66,11 +74,7 @@ object TranscriptPipeline {
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .parquet(cfg.inputDir)
 
-    val validated = Pipeline(src, Seq(
-      Required(Seq("conv_id", "turn_idx")),
-      DefaultValue(Map("tool" -> "none")),
-      Required(Seq("text")),
-      Truncate(Map("text" -> 4096))))
+    val validated = validate(src)
 
     import org.apache.spark.sql.Encoders
     implicit val enc = Encoders.product[TurnPos]
@@ -123,11 +127,7 @@ object TranscriptPipeline {
     val src = spark.readStream.schema(turnSchema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .parquet(cfg.inputDir)
-    val validated = Pipeline(src, Seq(
-        Required(Seq("conv_id", "turn_idx")),
-        DefaultValue(Map("tool" -> "none")),
-        Required(Seq("text")),
-        Truncate(Map("text" -> 4096))))
+    val validated = validate(src)
       .select("conv_id", "turn_idx", "role", "text", "tool", "ts", "pos")
       .withWatermark("ts", cfg.watermark)
     // packed hot path across the stateful boundary; unpack before the sink
@@ -142,7 +142,23 @@ object TranscriptPipeline {
     (q, sink)
   }
 
-  /** spark-submit entry: TranscriptPipeline <in> <outTable> <errors> <ckpt> <progress> */
+  /** State partitions for [[main]]: the deployer's
+    * `spark.sql.shuffle.partitions` when the SparkConf carries one (`--conf`
+    * or `-D`), else the task slots. Every state partition is a state store
+    * that each micro-batch loads and commits, a fixed cost per partition, so
+    * Spark's default of 200 on a 4-slot job spends the batch on store work.
+    */
+  private[graft] def statePartitions(conf: SparkConf, taskSlots: Int): Int =
+    conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(taskSlots)
+
+  /** spark-submit entry: TranscriptPipeline <in> <outTable> <errors> <ckpt> <progress>
+    *
+    * The state partition count follows [[statePartitions]] and is fixed for
+    * the checkpoint's lifetime: a restart restores the count recorded in the
+    * offset log, whatever the session says. A cluster that will grow should
+    * pass `--conf spark.sql.shuffle.partitions=<n>` when it creates the
+    * checkpoint.
+    */
   def main(args: Array[String]): Unit = {
     val Array(in, out, errs, ckpt, progress) = args.take(5)
     val spark = SparkSession.builder()
@@ -152,6 +168,9 @@ object TranscriptPipeline {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
+    val sc = spark.sparkContext
+    spark.conf.set("spark.sql.shuffle.partitions",
+      statePartitions(sc.getConf, sc.defaultParallelism))
     val (q, _) = startStateful(spark, Config(in, out, errs, ckpt, progress))
     q.awaitTermination()
   }

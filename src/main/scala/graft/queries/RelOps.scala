@@ -12,6 +12,13 @@ import graft.functions.fns
   */
 object RelOps {
 
+  /** `q_csv_source`'s golden fixture, resolved once against the working
+    * directory (the checkout root, where Verify and Bench run), so the Spark
+    * query and its DuckDB oracle read the same file.
+    */
+  private lazy val csvFixture: String =
+    new java.io.File("src/test/resources/csv/ValidFile.csv").getAbsolutePath
+
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q_tpch_q1" -> ((s, dir) => {
@@ -83,14 +90,7 @@ object RelOps {
 
     // Strict CSV source — oracle-checked against DuckDB read_csv on the
     // same golden fixture, plus CsvSourceSpec's contract fixtures.
-    "q_csv_source" -> ((s, dir) => {
-      val fixture = Seq(
-        "src/test/resources/csv/ValidFile.csv",
-        "/root/repo/src/test/resources/csv/ValidFile.csv")
-        .map(new java.io.File(_)).find(_.exists())
-        .getOrElse(new java.io.File("src/test/resources/csv/ValidFile.csv"))
-      graft.source.CsvStrictSource.read(s, fixture.getAbsolutePath).df
-    })
+    "q_csv_source" -> ((s, _) => graft.source.CsvStrictSource.read(s, csvFixture).df)
   )
 
   // ---- FNV-1a-64 in DuckDB: fold over UTF-8 bytes with HUGEINT (128-bit)
@@ -190,10 +190,10 @@ object RelOps {
     // on line 1, so data starts at 2 — the fixture has no multi-line
     // records, making row_number()+1 the line number).
     "q_csv_source" ->
-      """SELECT nullif(trim(A), '') AS A, nullif(trim(B), '') AS B,
+      s"""SELECT nullif(trim(A), '') AS A, nullif(trim(B), '') AS B,
         |  nullif(trim(C), '') AS C,
         |  row_number() OVER () + 1 AS pos
-        |FROM read_csv('/root/repo/src/test/resources/csv/ValidFile.csv',
+        |FROM read_csv('${csvFixture.replace("'", "''")}',
         |  header=true, all_varchar=true)""".stripMargin
   )
 }

@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** A per-batch side effect sharing [[MergeSink]]'s commit journal — the
   * Spark-native analog of the reference `DbCommand`'s ARBITRARY per-record
@@ -216,6 +217,13 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
   /** Idempotent keyed merge of one micro-batch. Safe to call from
     * `foreachBatch`; re-delivery of an applied batchId is a no-op.
     *
+    * The input is evaluated once (in a streaming job: one run of its
+    * stateful plan and state-store commits). Its deduped, bucketed form is
+    * persisted (`MEMORY_AND_DISK`) for the touched-bucket probe and the
+    * write, and released before `merge` returns. The persisted data is one
+    * batch, so the source's per-trigger limit (`maxFilesPerTrigger`) bounds
+    * it.
+    *
     * `deleteCol`: optional boolean column marking TOMBSTONES — the MERGE's
     * `WHEN MATCHED AND <del> THEN DELETE` arm (the reference DbCommand's
     * arbitrary-SQL surface includes deletes). A tombstone removes its key
@@ -246,50 +254,52 @@ class MergeSink(tableDir: String, keyCols: Seq[String], versionCol: String,
         Window.partitionBy(keyCols.map(col): _*).orderBy(col(versionCol).desc)))
       .filter(col("__rn") === 1).drop("__rn")
       .withColumn("__bucket", bucketCol(width))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val touched = keyed.select("__bucket").distinct()
+        .collect().map(_.getInt(0)).toSet
+      if (touched.isEmpty) { recordCommit(batchId); return }
 
-    val touched = keyed.select("__bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) { recordCommit(batchId); return }
+      // current rows of ONLY the touched buckets (partition-scoped read)
+      val touchedDirs = manifest.filter { case (b, _) => touched.contains(b) }
+        .values.toSeq.distinct.map(d => new HPath(root, d).toString)
+      val merged = {
+        val withCur =
+          if (touchedDirs.isEmpty) keyed
+          else {
+            // manifest entries point INSIDE __bucket=b partition dirs, so the
+            // read is already bucket-scoped; the partition column is not in
+            // the files — recompute it for the union/write
+            val cur = spark.read.parquet(touchedDirs: _*)
+              .withColumn("__bucket", bucketCol(width))
+              .withColumn("__del", lit(false))
+              .withColumn("__gen", lit(0))
+            cur.unionByName(keyed.withColumn("__gen", lit(1)))
+              .withColumn("__rn", row_number().over(
+                Window.partitionBy(keyCols.map(col): _*)
+                  .orderBy(col("__gen").desc))) // batch row beats current row
+              .filter(col("__rn") === 1).drop("__rn", "__gen")
+          }
+        // tombstone winners delete their key (WHEN MATCHED AND del THEN DELETE)
+        withCur.filter(!col("__del")).drop("__del")
+      }
 
-    // current rows of ONLY the touched buckets (partition-scoped read)
-    val touchedDirs = manifest.filter { case (b, _) => touched.contains(b) }
-      .values.toSeq.distinct.map(d => new HPath(root, d).toString)
-    val merged = {
-      val withCur =
-        if (touchedDirs.isEmpty) keyed
-        else {
-          // manifest entries point INSIDE __bucket=b partition dirs, so the
-          // read is already bucket-scoped; the partition column is not in
-          // the files — recompute it for the union/write
-          val cur = spark.read.parquet(touchedDirs: _*)
-            .withColumn("__bucket", bucketCol(width))
-            .withColumn("__del", lit(false))
-            .withColumn("__gen", lit(0))
-          cur.unionByName(keyed.withColumn("__gen", lit(1)))
-            .withColumn("__rn", row_number().over(
-              Window.partitionBy(keyCols.map(col): _*)
-                .orderBy(col("__gen").desc))) // batch row beats current row
-            .filter(col("__rn") === 1).drop("__rn", "__gen")
-        }
-      // tombstone winners delete their key (WHEN MATCHED AND del THEN DELETE)
-      withCur.filter(!col("__del")).drop("__del")
-    }
+      val next = v + 1
+      val dataDir = s"data_v$next"
+      merged
+        .repartition(math.min(touched.size, width), col("__bucket"))
+        .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
+        .parquet(new HPath(root, dataDir).toString)
 
-    val next = v + 1
-    val dataDir = s"data_v$next"
-    merged
-      .repartition(math.min(touched.size, width), col("__bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(new HPath(root, dataDir).toString)
-
-    // a tombstone batch can empty a touched bucket entirely — only buckets
-    // that actually wrote rows enter the manifest; emptied ones drop out
-    val written = writtenBuckets(dataDir)
-    val newManifest = manifest.filterNot { case (b, _) => touched.contains(b) } ++
-      (touched & written).map(b => b -> s"$dataDir/__bucket=$b")
-    writeVersion(next, newManifest, width)
-    recordCommit(batchId)
-    gc(newManifest)
+      // a tombstone batch can empty a touched bucket entirely — only buckets
+      // that actually wrote rows enter the manifest; emptied ones drop out
+      val written = writtenBuckets(dataDir)
+      val newManifest = manifest.filterNot { case (b, _) => touched.contains(b) } ++
+        (touched & written).map(b => b -> s"$dataDir/__bucket=$b")
+      writeVersion(next, newManifest, width)
+      recordCommit(batchId)
+      gc(newManifest)
+    } finally keyed.unpersist()
   }
 
   /** Admin migration: rewrite the WHOLE table at a new bucket width under

@@ -94,6 +94,24 @@ class MergeSinkSpec extends AnyFunSuite {
     assert(tableOf(sink).map(t => (t._1, t._2)) == Set(("c2", 0)))
   }
 
+  test("merge evaluates its input once; a journaled replay evaluates none of it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("merge_once").toString
+    val sink = new MergeSink(dir, Seq("conv_id", "turn_idx"), "pos", numBuckets = 4)
+    val rows = (0 until 40).map(i => turn(s"c${i % 5}", i, s"v$i", i))
+    val evaluated = spark.sparkContext.longAccumulator("merge_input_rows")
+    def input() = spark.createDataset(spark.sparkContext.parallelize(rows, 3))
+      .map { t => evaluated.add(1); t }.toDF()
+
+    sink.merge(input(), 0L)
+    assert(evaluated.value == rows.size)
+    assert(tableOf(sink).size == rows.size)
+
+    evaluated.reset()
+    sink.merge(input(), 0L)
+    assert(evaluated.value == 0L)
+  }
+
   test("merge: tombstones delete keys exactly-once; replays converge") {
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
